@@ -102,11 +102,11 @@ def cpu_partitions(df) -> int:
 
 # --- fold vs unrolled vector-kernel regime (r12) ---------------------------
 #
-# The broadcast-argmin kernels (k-means assignment, PQ encode) have two
-# BIT-IDENTICAL implementations: an interpreted higher-order fold
-# (zip_with + aggregate — allocates an intermediate array per scored
-# candidate) and a flat unrolled element_at chain (whole-stage-codegen
-# arithmetic, no allocation).  Measured on the 30x replica
+# The broadcast-argmin kernels (k-means assignment, PQ encode) score
+# with vector.sq_l2, which has two BIT-IDENTICAL tiers: an interpreted
+# higher-order fold (zip_with + aggregate — allocates an intermediate
+# array per scored candidate) and, given `dim`, a flat unrolled
+# element_at chain (whole-stage-codegen arithmetic, no allocation).  Measured on the 30x replica
 # (SCALE.md "fold vs unrolled kernel matrix"): the chain is ~2.6x
 # faster per fold in these shapes (5.26 -> 2.00 s assignment,
 # 10.25 -> 4.11 s encode) but costs ~0.4 s of codegen COMPILE per

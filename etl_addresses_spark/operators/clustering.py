@@ -26,10 +26,17 @@ is what real IVF indexes (FAISS-style) build.
 The fixed iteration count (DEFAULT_ITERS=3) makes the loop
 SQL-expressible: `kmeans_oracle_sql` / `ann_ivf_lloyd_oracle_sql`
 unroll assignment→update into chained CTEs whose squared-distance fold
-(`list_reduce`) matches Spark's sequential `F.aggregate` association
-exactly; only the per-dimension means and SSE sums differ at ulp level
+(vector.sq_l2_sql) matches the Spark kernel (vector.sq_l2) exactly;
+only the per-dimension means and SSE sums differ at ulp level
 (aggregation order), far below the driver's 1e-9 canonicalization.
 Recall and SSE-monotonicity stay asserted in pytest.
+
+The IVF index rows share one BUILD (`ivfpq_build`: coarse centroids,
+inverted lists, PQ codebook, PQ codes) and one nearest-centroid PROBE
+(`probe_lists`); each row composes them with its own serve step.  The
+rows whose build differs by design keep their own: the incremental
+add (trains on the base corpus only) and the shard merge (encodes per
+shard).
 """
 
 from __future__ import annotations
@@ -41,7 +48,6 @@ from pyspark.sql import types as T
 from etl_addresses_spark.operators.similarity import (
     EMB_DIM,
     QUERY_MOD,
-    _pair_dot_seq,
     _rank_topk,
     eval_query_pred,
     eval_query_pred_sql,
@@ -54,6 +60,15 @@ from etl_addresses_spark.operators.similarity import (
 )
 from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
 from etl_addresses_spark.functions.sizing import use_unrolled_kernel
+from etl_addresses_spark.functions.vector import (
+    dot,
+    dot_sql,
+    norm,
+    sq8_int_dot,
+    sq8_int_dot_sql,
+    sq_l2,
+    sq_l2_sql,
+)
 from etl_addresses_spark.sources.tables import fan_out, load_table
 
 DEFAULT_K_MOD = 100
@@ -121,48 +136,6 @@ IVF_LIST_COUNT_SQL = (
 )
 
 
-def _sqdist(a, b) -> F.Column:
-    """Squared L2 distance, sequential double fold (deterministic;
-    see similarity._pair_dot_seq for why the fold beats an unrolled
-    per-element chain)."""
-    diffs = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sqdist_unrolled(a, b, dim: int) -> F.Column:
-    """BIT-IDENTICAL twin of `_sqdist` for fixed-width arrays: the
-    left-associated chain 0.0 + d1 + d2 + ... is the exact sequence
-    the fold computes, term for term (equality asserted row-wise in
-    tests and by the unchanged oracle hashes), but as a flat
-    element_at expression tree instead of interpreted higher-order
-    functions (zip_with allocates an intermediate array per pair —
-    per-CANDIDATE in a broadcast argmin kernel).
-
-    Shape rule (r12, all three shapes measured on the 30x replica —
-    SCALE.md "fold vs unrolled kernel matrix"): use the unrolled chain
-    ONLY in broadcast-argmin kernels that evaluate MANY short/medium
-    folds per probe row against a model-sized build side (corpus x
-    k-centroid assignment: 5.26 -> 2.00 s; PQ encode 480k x 256
-    codewords of dim 8: 10.25 -> 4.11 s).  Keep the fold for
-    scan-shaped single folds per row (norms: fold 2x faster) AND for
-    the wide-broadcast cosine kernels, where the unrolled chain
-    measured 9x SLOWER at 30x (18.6 -> 175 s, corpus x 1200-query
-    broadcast) — the generated join-loop method grows past JIT limits
-    and runs deoptimized."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        diff = F.element_at(a, i).cast("double") - F.element_at(b, i).cast(
-            "double"
-        )
-        expr = expr + diff * diff
-    return expr
-
-
 _CENT_SCHEMA = T.StructType(
     [
         T.StructField("cent_id", T.LongType()),
@@ -192,16 +165,14 @@ def _assign(
     vec_id (measured 34 s -> ~4 s for the iteration pipeline at 10x).
     The (d2, cent_id) struct order reproduces the window's exact
     deterministic tie-break."""
-    # dense_kernel switches to the unrolled chain (see
-    # _sqdist_unrolled's shape rule and sizing.use_unrolled_kernel's
+    # dense_kernel switches to the unrolled chain (see the shape rule
+    # in functions/vector.py and sizing.use_unrolled_kernel's
     # crossover): this is the corpus x k broadcast-argmin — 15M folds
     # at the 30x replica, 5.26 -> 2.00 s for the swap, bit-identical,
     # but the chain costs ~0.4 s codegen compile per stage, so small
     # corpora keep the fold
-    d2 = (
-        _sqdist_unrolled(F.col("embedding"), F.col("cent_emb"), EMB_DIM)
-        if dense_kernel
-        else _sqdist(F.col("embedding"), F.col("cent_emb"))
+    d2 = sq_l2(
+        F.col("embedding"), F.col("cent_emb"), EMB_DIM if dense_kernel else None
     )
     scored = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id",
@@ -345,17 +316,6 @@ def kmeans_cluster_sizes(
     )
 
 
-def _duckdb_sqdist(a: str, b: str) -> str:
-    """DuckDB twin of `_sqdist`: left-to-right list_reduce fold of
-    squared diffs (Spark's leading +0.0 fold seed is an IEEE no-op)."""
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), "
-        f"(x, y) -> x + y)"
-    )
-
-
 def _kmeans_ctes(
     k_mod: int = DEFAULT_K_MOD,
     iters: int = DEFAULT_ITERS,
@@ -397,7 +357,7 @@ a{k} AS MATERIALIZED (
       PARTITION BY vec_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id, v.embedding, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM {src} v CROSS JOIN c{p} c))
   WHERE r = 1
 )"""
@@ -438,10 +398,7 @@ FROM a{final} GROUP BY cluster_id
 def ann_ivf_lloyd_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        TOPK_K,
-        _duckdb_dot,
-    )
+    from etl_addresses_spark.operators.similarity import TOPK_K
 
     final = iters + 1
     return (
@@ -449,7 +406,7 @@ def ann_ivf_lloyd_oracle_sql(
         + f""",
 assigned AS MATERIALIZED (
   SELECT a.vec_id, a.embedding, a.cluster_id AS list_id,
-         sqrt(CAST({_duckdb_dot('a.embedding', 'a.embedding')} AS DOUBLE))
+         sqrt(CAST({dot_sql('a.embedding', 'a.embedding')} AS DOUBLE))
            AS vnorm
   FROM a{final} a
 ),
@@ -459,17 +416,17 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, v.embedding AS q_emb,
-             sqrt(CAST({_duckdb_dot('v.embedding', 'v.embedding')} AS DOUBLE))
+             sqrt(CAST({dot_sql('v.embedding', 'v.embedding')} AS DOUBLE))
                AS q_norm,
              c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE v.vec_id % {QUERY_MOD} = 0))
   WHERE r <= 2
 ),
 scored AS (
   SELECT p.query_id, a.vec_id AS cand_id,
-         CAST({_duckdb_dot('p.q_emb', 'a.embedding')} AS DOUBLE)
+         CAST({dot_sql('p.q_emb', 'a.embedding')} AS DOUBLE)
            / (p.q_norm * a.vnorm) AS cosine
   FROM assigned a JOIN probes p ON a.list_id = p.list_id
   WHERE a.vec_id <> p.query_id
@@ -480,6 +437,59 @@ SELECT query_id, rank, cand_id, cosine FROM (
   FROM scored)
 WHERE rank <= {TOPK_K}
 """
+    )
+
+
+def ivfpq_build(
+    e: DataFrame, n: int | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The BUILD half of the IVF-PQ index over corpus `e`: Lloyd-train
+    the coarse quantizer, assign every vector to its Voronoi list,
+    train the PQ codebook and encode the corpus.  Returns the four
+    corpus-side artifacts `_ivfpq_serve` answers from: (coarse
+    centroids, inverted lists (vec_id, list_id), PQ codebook, PQ
+    codes).  `n` is e's row count; callers that already counted pass
+    it in (one scan-only count gate otherwise, as in kmeans_fit)."""
+    if n is None:
+        n = e.count()
+    cents, _ = kmeans_fit(e, n=n)
+    # fan_out: cell assignment is k x d folds per row over a
+    # bytes-small scan (see kmeans_fit); inverted lists are narrow
+    # (vec_id, list_id) labels only — the embedding never rides past
+    # the argmin (r9 kmeans lesson)
+    lists = _assign(
+        fan_out(e.select("vec_id", "embedding"), e.sparkSession),
+        cents,
+        attach_embedding=False,
+        dense_kernel=use_unrolled_kernel(n),
+    ).select("vec_id", F.col("cluster_id").alias("list_id"))
+    pq_cents = pq_codebook(e)
+    return cents, lists, pq_cents, pq_encode(e, pq_cents, n_hint=n)
+
+
+def probe_lists(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Nearest-centroid probe: each query (query_id, q_emb, *carry)
+    picks its `nprobe` nearest coarse lists by squared L2, ties broken
+    by cent_id — the deterministic (d2, cent_id) order the oracles'
+    row_number mirrors.  |queries| x k scored rows against the
+    broadcast centroids: model-sized.  Returns (query_id, *carry,
+    list_id, pr), pr being the 1-based probe rank."""
+    scored = queries.crossJoin(F.broadcast(cents)).select(
+        "query_id",
+        *carry,
+        "cent_id",
+        sq_l2(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
+    )
+    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
+    return (
+        scored.withColumn("pr", F.row_number().over(wp))
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", *carry, F.col("cent_id").alias("list_id"), "pr")
     )
 
 
@@ -511,22 +521,7 @@ def ann_ivf_pq_topk(
     iterations and reuses similarity.PQ_SQL_CTES verbatim.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    # fan_out: cell assignment is k x d folds per row over a
-    # bytes-small scan (see kmeans_fit)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    # inverted lists: narrow (vec_id, list_id) labels only — the
-    # embedding never rides past the argmin (r9 kmeans lesson)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
-    return _ivfpq_serve(
-        spark, e, cents, lists, pq_cents, codes, eval_thresh=eval_thresh
-    )
+    return _ivfpq_serve(spark, e, *ivfpq_build(e), eval_thresh=eval_thresh)
 
 
 def _ivfpq_serve(
@@ -556,20 +551,9 @@ def _ivfpq_serve(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", F.col("cent_id").alias("list_id"))
-    )
     # (query, probed list, LUT) — |queries| x nprobe rows carrying the
     # M x k double LUT: model-sized, broadcast to the candidate scan
-    probe_luts = probes.join(luts, "query_id")
+    probe_luts = probe_lists(queries, cents, 2).join(luts, "query_id")
     # fan_out above the ADC kernel: codes⋈lists is a narrow agg/join
     # output whose exchange AQE coalesces to 1-2 partitions (r9 batch7)
     cand = (
@@ -619,15 +603,7 @@ def ann_index_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = ivfpq_build(e)
 
     # applicationId is unique per SparkSession (no cross-session race);
     # the sf_dir hash separates datasets whose paths share a basename
@@ -712,7 +688,7 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE {probe_pred}))
   WHERE r <= 2
@@ -872,7 +848,7 @@ batch_assign AS MATERIALIZED (
       PARTITION BY vec_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM (SELECT vec_id, embedding FROM embeddings WHERE {batch_pred}) v
       CROSS JOIN c{iters} c))
   WHERE r = 1
@@ -888,7 +864,7 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM embeddings v CROSS JOIN c{iters} c
       WHERE v.vec_id % {QUERY_MOD} = 0))
   WHERE r <= 2
@@ -949,15 +925,7 @@ def ann_index_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_ivf_pq_topk`'s plan shape (broadcast probe-LUT join, no
     corpus cartesian)."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = ivfpq_build(e)
     keep = ~(
         F.col("vec_id") % DELETE_TOMBSTONE_MOD == DELETE_TOMBSTONE_REM
     )
@@ -1009,30 +977,14 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
     thresh = eval_query_sample_thresh(n)
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = ivfpq_build(e, n)
     luts = pq_query_luts(e, pq_cents, query_pred=eval_query_pred(thresh))
+    vecs = fan_out(e.select("vec_id", "embedding"), spark)
     queries = vecs.filter(eval_query_pred(thresh)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= max(NPROBE_CURVE))
-        .select("query_id", F.col("cent_id").alias("list_id"), "pr")
-    )
+    probes = probe_lists(queries, cents, max(NPROBE_CURVE))
     probe_luts = probes.join(luts, "query_id")
     cand = (
         fan_out(codes.join(lists, "vec_id"), spark)
@@ -1122,7 +1074,7 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE {probe_pred}))
   WHERE r <= {max(NPROBE_CURVE)}
@@ -1168,10 +1120,7 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Coarse probing measures FLOAT squared-L2 against the centroids
     (the index quantizes STORAGE, not the coarse metric — the FAISS
     contract), so probes reuse the flagship argmin/tie-break."""
-    from etl_addresses_spark.operators.similarity import (
-        sq8_codes,
-        sq8_int_dot,
-    )
+    from etl_addresses_spark.operators.similarity import sq8_codes
 
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
@@ -1187,17 +1136,7 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", F.col("cent_id").alias("list_id"))
-    )
+    probes = probe_lists(queries, cents, 2)
     q_codes = qv.select(
         F.col("vec_id").alias("query_id"),
         F.col("qe").alias("q_qe"),
@@ -1226,11 +1165,7 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_sq8_oracle_sql(
     k_mod: int = DEFAULT_K_MOD, iters: int = DEFAULT_ITERS
 ) -> str:
-    from etl_addresses_spark.operators.similarity import (
-        SQ8_SQL_CTES,
-        TOPK_K,
-        sq8_int_dot_sql,
-    )
+    from etl_addresses_spark.operators.similarity import SQ8_SQL_CTES, TOPK_K
 
     final = iters + 1
     return (
@@ -1246,7 +1181,7 @@ sq_probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE v.vec_id % {QUERY_MOD} = 0))
   WHERE r <= 2
@@ -1285,34 +1220,22 @@ def ann_ivf_lloyd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _assign(
         vecs, cents, dense_kernel=use_unrolled_kernel(n)
     ).select("vec_id", "embedding", F.col("cluster_id").alias("list_id"))
-    qnorm = F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding")))
+    qnorm = norm(F.col("embedding"))
     queries = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         qnorm.alias("q_norm"),
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q_emb",
-        "q_norm",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", "q_emb", "q_norm", F.col("cent_id").alias("list_id"))
-    )
+    probes = probe_lists(queries, cents, 2, carry=("q_emb", "q_norm"))
     cand = assigned.join(probes, "list_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    cnorm = F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding")))
+    cnorm = norm(F.col("embedding"))
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("cand_id"),
         (
-            _pair_dot_seq(F.col("q_emb"), F.col("embedding"))
+            dot(F.col("q_emb"), F.col("embedding"))
             / (F.col("q_norm") * cnorm)
         ).alias("cosine"),
     )
@@ -1353,32 +1276,17 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: the DuckDB twin widens the same scored CTE
     and re-scores with the same sequential-fold dot product, so the
     doubly-approximate candidate set AND the exact rerank both hash."""
-    from etl_addresses_spark.operators.similarity import TOPK_K, _norms
+    from etl_addresses_spark.operators.similarity import TOPK_K
 
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
     cands = _ivfpq_serve(
-        spark,
-        e,
-        cents,
-        lists,
-        pq_cents,
-        codes,
-        topk=TOPK_K * REFINE_K_FACTOR,
+        spark, e, *ivfpq_build(e), topk=TOPK_K * REFINE_K_FACTOR
     ).select("query_id", "cand_id")
     # exact refine: fetch candidate embeddings with one narrow n-row
     # join (|queries| x k_factor*k pairs vs the corpus), broadcast the
     # query-side vectors, re-score with the exact sequential-fold
     # cosine the brute row uses
-    en = e.join(_norms(e), "vec_id")
+    en = e.join(e.select("vec_id", norm(F.col("embedding")).alias("norm")), "vec_id")
     cand_side = en.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("cand_emb"),
@@ -1396,7 +1304,7 @@ def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "cand_id",
             (
-                _pair_dot_seq(F.col("q_emb"), F.col("cand_emb"))
+                dot(F.col("q_emb"), F.col("cand_emb"))
                 / (F.col("q_norm") * F.col("cand_norm"))
             ).alias("cosine"),
         )
@@ -1410,14 +1318,13 @@ def ann_ivfpq_refine_oracle_sql(
     from etl_addresses_spark.operators.similarity import (
         PQ_ADC_SQL,
         TOPK_K,
-        _duckdb_dot,
         pq_sql_ctes,
     )
 
     final = iters + 1
-    dot_qc = _duckdb_dot("eq.embedding", "ec.embedding")
-    norm_q = f"sqrt(CAST({_duckdb_dot('eq.embedding', 'eq.embedding')} AS DOUBLE))"
-    norm_c = f"sqrt(CAST({_duckdb_dot('ec.embedding', 'ec.embedding')} AS DOUBLE))"
+    dot_qc = dot_sql("eq.embedding", "ec.embedding")
+    norm_q = f"sqrt(CAST({dot_sql('eq.embedding', 'eq.embedding')} AS DOUBLE))"
+    norm_c = f"sqrt(CAST({dot_sql('ec.embedding', 'ec.embedding')} AS DOUBLE))"
     return (
         _kmeans_ctes(k_mod, iters)
         + f""",
@@ -1431,7 +1338,7 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE v.vec_id % {QUERY_MOD} = 0))
   WHERE r <= 2
@@ -1544,15 +1451,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: the DuckDB twin adds the same label-equality
     join to the scored CTE of the shared IVF-PQ oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    dense = use_unrolled_kernel(n)
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False, dense_kernel=dense
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = ivfpq_build(e)
     labels = e.select("vec_id", "label")
     luts = pq_query_luts(e, pq_cents)
     queries = fan_out(
@@ -1562,18 +1461,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         "label",
     )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "label",
-        "cent_id",
-        _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    probes = (
-        probe_scored.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= 2)
-        .select("query_id", "label", F.col("cent_id").alias("list_id"))
-    )
+    probes = probe_lists(queries, cents, 2, carry=("label",))
     probe_luts = probes.join(luts, "query_id")
     # the label rides the broadcast side and joins as a KEY next to
     # list_id: the tenant constraint is enforced inside the hash join
@@ -1615,7 +1503,7 @@ probes AS MATERIALIZED (
       PARTITION BY query_id ORDER BY d2 ASC, cluster_id ASC) AS r
     FROM (
       SELECT v.vec_id AS query_id, c.cent_id AS cluster_id,
-             {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+             {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
       FROM vecs v CROSS JOIN c{iters} c
       WHERE v.vec_id % {QUERY_MOD} = 0))
   WHERE r <= 2

@@ -32,8 +32,8 @@ Both iterate a FIXED number of steps, so the whole recursion unrolls
 into chained MATERIALIZED CTEs for the DuckDB oracle (the
 pagerank/kmeans/labelprop technique).  Bit-exactness story: cosine
 similarity is the shared sequential-fold dot product
-(similarity._pair_dot_seq vs similarity._duckdb_dot — identical fold
-order, identical doubles); per-step scores combine those doubles with
+(functions/vector.py: dot vs dot_sql — identical fold order,
+identical doubles); per-step scores combine those doubles with
 single multiplies/adds in the same association order both sides; max
 over a set of identical doubles is exact; every argmax/argmin
 tie-breaks on the integer id.  So both rows are full hash-checked
@@ -47,12 +47,8 @@ from pyspark.sql import functions as F
 
 from etl_addresses_spark.ckpt import CheckpointChain
 from etl_addresses_spark.functions.sizing import loop_partitions
+from etl_addresses_spark.functions.vector import dot, dot_sql, norm
 from etl_addresses_spark.session import scoped_shuffle_partitions
-from etl_addresses_spark.operators.similarity import (
-    _duckdb_dot,
-    _norm_col,
-    _pair_dot_seq,
-)
 from etl_addresses_spark.sources.tables import load_table
 
 MMR_QUERY_VEC = 0   # corpus doc whose embedding is the query (RRF convention)
@@ -67,14 +63,14 @@ KCENTER_K = 10      # centers to pick
 def _cos_col(a, b, na, nb) -> F.Column:
     """cosine(a, b) with the shared fold: dot / (norm_a * norm_b) —
     the association every checked cosine row uses."""
-    return _pair_dot_seq(a, b) / (na * nb)
+    return dot(a, b) / (na * nb)
 
 
 def _corpus_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, norm) over the embeddings table."""
     e = load_table(spark, sf_dir, "embeddings")
     return e.select(
-        "vec_id", "embedding", _norm_col(F.col("embedding")).alias("norm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("norm")
     )
 
 
@@ -174,12 +170,12 @@ def mmr_oracle_sql(
     CTE, then the greedy loop unrolled into {k} chained MATERIALIZED
     pick/sel CTEs with the same score association and doc_id
     tie-break."""
-    dot_qe = _duckdb_dot("q.q_emb", "c.embedding")
-    dot_ab = _duckdb_dot("a.embedding", "b.embedding")
+    dot_qe = dot_sql("q.q_emb", "c.embedding")
+    dot_ab = dot_sql("a.embedding", "b.embedding")
     sql = f"""
 WITH corpus AS MATERIALIZED (
   SELECT d.doc_id, e.embedding,
-    sqrt(CAST({_duckdb_dot('e.embedding', 'e.embedding')} AS DOUBLE)) AS norm
+    sqrt(CAST({dot_sql('e.embedding', 'e.embedding')} AS DOUBLE)) AS norm
   FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
 ),
 q AS (
@@ -309,11 +305,11 @@ def kcenter_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kcenter_oracle_sql(k: int = KCENTER_K) -> str:
     """DuckDB replica: the greedy loop unrolled — state{t} carries
     (vec_id, running max_cos); pick{t} is the argmin row."""
-    dot_ce = _duckdb_dot("c.c_emb", "s.embedding")
+    dot_ce = dot_sql("c.c_emb", "s.embedding")
     sql = f"""
 WITH emb AS MATERIALIZED (
   SELECT vec_id, embedding,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS norm
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS norm
   FROM embeddings
 ),
 c1 AS (

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.functions.vector import dot
 from etl_addresses_spark.sources.tables import fan_out, load_table
 
 EMB_DIM = 64
@@ -199,7 +200,7 @@ def embedding_pc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the canonical inference shape for 100 TB: the learned
     model is d numbers — collect it (the kmeans k-row precedent),
     inline it as an array LITERAL, and the scoring pass is
-    zip_with + aggregate inside one projection: ZERO shuffles, zero
+    one vector.dot fold inside one projection: ZERO shuffles, zero
     joins, the corpus is read once and never moves.  (The join
     formulation — posexplode + broadcast join + re-group — would pay
     a d-fold row expansion and a groupBy shuffle for nothing.)"""
@@ -207,11 +208,7 @@ def embedding_pc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["i"]: r["loading"] for r in embedding_top_pc(spark, sf_dir).collect()
     }
     w = F.array(*[F.lit(loadings[i]) for i in range(EMB_DIM)])
-    score = F.aggregate(
-        F.zip_with(F.col("embedding").cast("array<double>"), w, lambda x, v: x * v),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    score = dot(F.col("embedding").cast("array<double>"), w)
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.round(score, 6).alias("pc_score"))

@@ -36,11 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_addresses_spark.operators.similarity import (
-    _duckdb_dot,
-    _norm_col,
-    _pair_dot_seq,
-)
+from etl_addresses_spark.functions.vector import dot, dot_sql, norm
 from etl_addresses_spark.sources.tables import load_table
 
 TOKS = "split(text, ' ')"
@@ -361,14 +357,14 @@ def semantic_dedup_for(
     cents = cent_base.select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent_emb"),
-        _norm_col(F.col("embedding")).alias("cent_norm"),
+        norm(F.col("embedding")).alias("cent_norm"),
     )
     # fan_out: the k x d assignment kernel dwarfs row bytes; a dense
     # single-split scan would serialize it on one core (tables.fan_out)
     from etl_addresses_spark.sources.tables import fan_out
 
     vecs = fan_out(e, e.sparkSession).select(
-        "vec_id", "embedding", _norm_col(F.col("embedding")).alias("vnorm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("vnorm")
     )
     # Narrow argmax (r14, guide §2.3 "project before the exchange"):
     # the scoring projection emits ONLY (vec_id, cent_id, c_cos) — the
@@ -386,7 +382,7 @@ def semantic_dedup_for(
         "vec_id",
         "cent_id",
         (
-            _pair_dot_seq(F.col("embedding"), F.col("cent_emb"))
+            dot(F.col("embedding"), F.col("cent_emb"))
             / (F.col("vnorm") * F.col("cent_norm"))
         ).alias("c_cos"),
     )
@@ -429,7 +425,7 @@ def semantic_dedup_for(
         .select(
             "vec_b",
             (
-                _pair_dot_seq(F.col("emb_a"), F.col("emb_b"))
+                dot(F.col("emb_a"), F.col("emb_b"))
                 / (F.col("norm_a") * F.col("norm_b"))
             ).alias("cosine"),
         )
@@ -454,7 +450,7 @@ def semantic_dedup_for(
 SEMANTIC_DEDUP_SQL = f"""
 WITH base AS (
   SELECT vec_id, embedding,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS vnorm
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS vnorm
   FROM embeddings
 ),
 cmod AS (
@@ -468,7 +464,7 @@ cents AS (
 ),
 scored AS (
   SELECT v.vec_id, v.embedding, v.vnorm, c.cent_id,
-    CAST({_duckdb_dot('v.embedding', 'c.cent_emb')} AS DOUBLE)
+    CAST({dot_sql('v.embedding', 'c.cent_emb')} AS DOUBLE)
       / (v.vnorm * c.cent_norm) AS c_cos
   FROM base v CROSS JOIN cents c
 ),
@@ -480,7 +476,7 @@ assigned AS (
 ),
 pairs AS (
   SELECT b.vec_id AS vec_b,
-    CAST({_duckdb_dot('a.embedding', 'b.embedding')} AS DOUBLE)
+    CAST({dot_sql('a.embedding', 'b.embedding')} AS DOUBLE)
       / (a.vnorm * b.vnorm) AS cosine
   FROM assigned a JOIN assigned b
     ON a.list_id = b.list_id AND a.vec_id < b.vec_id

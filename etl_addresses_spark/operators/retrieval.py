@@ -30,12 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
+from etl_addresses_spark.functions.vector import dot, dot_sql, norm, sq_l2, sq_l2_sql
 from etl_addresses_spark.operators.llmtext import BM25_SCORED_CTES, bm25_scored
-from etl_addresses_spark.operators.similarity import (
-    _duckdb_dot,
-    _norm_col,
-    _pair_dot_seq,
-)
 from etl_addresses_spark.sources.tables import load_table
 
 RRF_K = 60          # the canonical RRF constant
@@ -71,14 +67,14 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs_with_embeddings contract), scored against one query vector
     emb = e.join(
         d.select("doc_id"), e.vec_id == F.col("doc_id"), "inner"
-    ).select("doc_id", "embedding", _norm_col(F.col("embedding")).alias("norm"))
+    ).select("doc_id", "embedding", norm(F.col("embedding")).alias("norm"))
     q = emb.filter(F.col("doc_id") == RRF_QUERY_VEC).select(
         F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm")
     )
     cos_scored = emb.crossJoin(F.broadcast(q)).select(
         "doc_id",
         (
-            _pair_dot_seq(F.col("q_emb"), F.col("embedding"))
+            dot(F.col("q_emb"), F.col("embedding"))
             / (F.col("q_norm") * F.col("norm"))
         ).alias("cosine"),
     )
@@ -110,7 +106,7 @@ bm25_top AS (
 ),
 emb AS (
   SELECT d.doc_id, e.embedding,
-    sqrt(CAST({_duckdb_dot('e.embedding', 'e.embedding')} AS DOUBLE)) AS norm
+    sqrt(CAST({dot_sql('e.embedding', 'e.embedding')} AS DOUBLE)) AS norm
   FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
 ),
 q AS (
@@ -119,7 +115,7 @@ q AS (
 ),
 cos_scored AS (
   SELECT emb.doc_id,
-    CAST({_duckdb_dot('q.q_emb', 'emb.embedding')} AS DOUBLE)
+    CAST({dot_sql('q.q_emb', 'emb.embedding')} AS DOUBLE)
       / (q.q_norm * emb.norm) AS cosine
   FROM emb CROSS JOIN q
 ),
@@ -161,15 +157,9 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin reuses the kmeans CTE unroll + PQ_SQL_CTES + BM25 CTEs
     verbatim.  Output: doc_id, (nullable) bm25_rank / vec_rank, rrf.
     """
-    from etl_addresses_spark.operators.clustering import (
-        _assign,
-        _sqdist,
-        kmeans_fit,
-    )
+    from etl_addresses_spark.operators.clustering import ivfpq_build
     from etl_addresses_spark.operators.similarity import (
         pq_adc_expr,
-        pq_codebook,
-        pq_encode,
         pq_query_luts,
     )
     from etl_addresses_spark.sources.tables import fan_out
@@ -179,17 +169,7 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bm25_top = _ranked_top(bm25_scored(d), "bm25", "bm25_rank")
 
-    from etl_addresses_spark.functions.sizing import use_unrolled_kernel
-
-    n = e.count()
-    cents, _ = kmeans_fit(e, n=n)
-    vecs = fan_out(e.select("vec_id", "embedding"), spark)
-    lists = _assign(
-        vecs, cents, attach_embedding=False,
-        dense_kernel=use_unrolled_kernel(n),
-    ).select("vec_id", F.col("cluster_id").alias("list_id"))
-    pq_cents = pq_codebook(e)
-    codes = pq_encode(e, pq_cents, n_hint=n)
+    cents, lists, pq_cents, codes = ivfpq_build(e)
     # RRF_QUERY_VEC = 0 satisfies the % QUERY_MOD query rule, so the
     # shared LUT builder applies — restricted to the ONE query BEFORE
     # the M x codewords LUT construction (r12 advice: a post-build
@@ -200,12 +180,13 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nprobe=2 nearest coarse lists for the one query: k scored rows,
     # TakeOrdered(2) — model-sized end to end
     probes = (
-        vecs.filter(F.col("vec_id") == RRF_QUERY_VEC)
+        fan_out(e.select("vec_id", "embedding"), spark)
+        .filter(F.col("vec_id") == RRF_QUERY_VEC)
         .select(F.col("embedding").alias("q_emb"))
         .crossJoin(F.broadcast(cents))
         .select(
             F.col("cent_id").alias("list_id"),
-            _sqdist(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
+            sq_l2(F.col("q_emb"), F.col("cent_emb")).alias("d2"),
         )
         .orderBy(F.asc("d2"), F.asc("list_id"))
         .limit(2)
@@ -242,7 +223,6 @@ def rrf_hybrid_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rrf_hybrid_ivfpq_oracle_sql() -> str:
     from etl_addresses_spark.operators.clustering import (
         DEFAULT_ITERS,
-        _duckdb_sqdist,
         _kmeans_ctes,
     )
     from etl_addresses_spark.operators.similarity import (
@@ -262,7 +242,7 @@ ivf_doc_lists AS MATERIALIZED (
 vprobes AS (
   SELECT list_id FROM (
     SELECT c.cent_id AS list_id,
-           {_duckdb_sqdist('v.embedding', 'c.cent_emb')} AS d2
+           {sq_l2_sql('v.embedding', 'c.cent_emb')} AS d2
     FROM vecs v CROSS JOIN c{DEFAULT_ITERS} c
     WHERE v.vec_id = {RRF_QUERY_VEC})
   ORDER BY d2 ASC, list_id ASC LIMIT 2

@@ -24,6 +24,8 @@ Three tiers:
 
 At scale the broadcast side is always the small query/centroid set and
 the corpus side streams; no all-pairs shuffle exists in any tier.
+Every kernel (dot, norm, squared-L2, SQ8 int dot) and its DuckDB twin
+comes from functions/vector.py.
 """
 
 from __future__ import annotations
@@ -32,6 +34,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, Window as W
 
 from etl_addresses_spark.functions.hashing import knuth_order_col, knuth_order_sql
+from etl_addresses_spark.functions.vector import (
+    dot,
+    dot_sql,
+    fold_sql,
+    norm,
+    sq8_int_dot,
+    sq8_int_dot_sql,
+    sq_l2,
+    sq_l2_sql,
+)
 from etl_addresses_spark.sources.tables import fan_out, load_table
 
 TOPK_K = 10
@@ -102,49 +114,6 @@ def eval_query_pred_sql(id_expr: str, n_sql: str) -> str:
     )
 
 
-def _pair_dot_seq(emb_a: F.Column, emb_b: F.Column) -> F.Column:
-    """Bit-reproducible dot product of two float vectors: per-element
-    double products (float->double exact) summed with a SEQUENTIAL
-    left fold.  DuckDB's list_reduce folds in the same order, so both
-    engines produce the identical double.  (A decimal accumulation was
-    tried first, but DuckDB's DECIMAL->DOUBLE cast is not correctly
-    rounded and diverges from the JVM's by 1 ulp.  An unrolled flat
-    64-term chain was tried too — measured 3x SLOWER than this fold:
-    64 GetArrayItem nodes each pay a null+bounds check, while
-    zip_with/aggregate make one primitive-array traversal.)"""
-    prods = F.zip_with(
-        emb_a,
-        emb_b,
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norms(e: DataFrame) -> DataFrame:
-    return e.select(
-        "vec_id",
-        F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding"))).alias(
-            "norm"
-        ),
-    )
-
-
-# DuckDB rendering of the same sequential-fold dot product for lists
-# a/b: list_reduce folds left-to-right exactly like Spark's aggregate
-# (the extra leading +0.0 in Spark's fold is an IEEE no-op).
-def _duckdb_dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-        f"(x, y) -> x + y)"
-    )
-
-
-def _norm_col(c: F.Column) -> F.Column:
-    """sqrt of the sequential-fold self dot product (see _pair_dot_seq)."""
-    return F.sqrt(_pair_dot_seq(c, c))
-
-
 def _rank_topk(
     scored: DataFrame, score_col: str = "cosine", k: int = TOPK_K
 ) -> DataFrame:
@@ -164,7 +133,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for query vectors
     (vec_id % 50 == 0), bit-reproducible sequential-fold scoring."""
     e = load_table(spark, sf_dir, "embeddings")
-    norms = _norms(e)
+    norms = e.select("vec_id", norm(F.col("embedding")).alias("norm"))
     # fan_out AFTER the norms join (r9 review): below the join, the
     # kernel's width would be the JOIN output's partitioning — fine
     # while norms auto-broadcasts, but an SMJ regime would re-coalesce
@@ -194,7 +163,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "cand_id",
         (
-            _pair_dot_seq(F.col("q_emb"), F.col("cand_emb"))
+            dot(F.col("q_emb"), F.col("cand_emb"))
             / (F.col("q_norm") * F.col("cand_norm"))
         ).alias("cosine"),
     )
@@ -211,7 +180,7 @@ def cosine_topk_sql(query_pred: str | None = None) -> str:
     return f"""
 WITH en AS MATERIALIZED (SELECT count(*) AS n FROM embeddings),
 norms AS (
-  SELECT vec_id, sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS norm,
+  SELECT vec_id, sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS norm,
          embedding
   FROM embeddings
 ),
@@ -221,7 +190,7 @@ queries AS (
 ),
 scored AS (
   SELECT q.query_id, c.vec_id AS cand_id,
-    CAST({_duckdb_dot('q.q_emb', 'c.embedding')} AS DOUBLE) / (q.q_norm * c.norm) AS cosine
+    CAST({dot_sql('q.q_emb', 'c.embedding')} AS DOUBLE) / (q.q_norm * c.norm) AS cosine
   FROM norms c CROSS JOIN queries q
   WHERE c.vec_id <> q.query_id
 )
@@ -261,14 +230,14 @@ def cosine_topk_fast_for(
     corpus = fan_out(e, e.sparkSession).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("cand_emb"),
-        _norm_col(F.col("embedding")).alias("cand_norm"),
+        norm(F.col("embedding")).alias("cand_norm"),
     )
     queries = (
         e.filter(eval_query_pred(eval_thresh))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _norm_col(F.col("embedding")).alias("q_norm"),
+            norm(F.col("embedding")).alias("q_norm"),
         )
     )
     pairs = corpus.crossJoin(F.broadcast(queries)).filter(
@@ -278,7 +247,7 @@ def cosine_topk_fast_for(
         "query_id",
         "cand_id",
         (
-            _pair_dot_seq(F.col("q_emb"), F.col("cand_emb"))
+            dot(F.col("q_emb"), F.col("cand_emb"))
             / (F.col("q_norm") * F.col("cand_norm"))
         ).alias("cosine"),
     )
@@ -293,7 +262,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % NEAR_DUP_MOD == 0
     )
-    norms = _norms(e)
+    norms = e.select("vec_id", norm(F.col("embedding")).alias("norm"))
     side = e.join(norms, "vec_id").select("vec_id", "label", "embedding", "norm")
     a = side.select(
         F.col("vec_id").alias("vec_a"),
@@ -315,7 +284,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_b",
         F.col("label_a").alias("label"),
         (
-            _pair_dot_seq(F.col("emb_a"), F.col("emb_b"))
+            dot(F.col("emb_a"), F.col("emb_b"))
             / (F.col("norm_a") * F.col("norm_b"))
         ).alias("cosine"),
     )
@@ -325,13 +294,13 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMBEDDING_NEAR_DUP_SQL = f"""
 WITH sub AS (
   SELECT vec_id, label, embedding,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS norm
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS norm
   FROM embeddings WHERE vec_id % {NEAR_DUP_MOD} = 0
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-  CAST({_duckdb_dot('a.embedding', 'b.embedding')} AS DOUBLE) / (a.norm * b.norm) AS cosine
+  CAST({dot_sql('a.embedding', 'b.embedding')} AS DOUBLE) / (a.norm * b.norm) AS cosine
 FROM sub a JOIN sub b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE CAST({_duckdb_dot('a.embedding', 'b.embedding')} AS DOUBLE) / (a.norm * b.norm)
+WHERE CAST({dot_sql('a.embedding', 'b.embedding')} AS DOUBLE) / (a.norm * b.norm)
       >= {NEAR_DUP_THRESHOLD}
 """
 
@@ -430,19 +399,11 @@ def embedding_srp_lsh_pairs_for(
     e: DataFrame, band_bits: int = SRP_BAND_BITS
 ) -> DataFrame:
     n_bands = SRP_BITS // band_bits
-    norm = F.sqrt(_pair_dot_seq(F.col("embedding"), F.col("embedding")))
     signs = _srp_signs()
     bit_cols = []
     for row in signs:
-        arr = F.array(*[F.lit(v) for v in row])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), arr, lambda x, y: x.cast("double") * y
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit_cols.append(F.when(dot > 0, F.lit("1")).otherwise(F.lit("0")))
+        proj = dot(F.col("embedding"), F.array(*[F.lit(v) for v in row]))
+        bit_cols.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
     bands = F.array(
         *[
             F.struct(
@@ -455,7 +416,10 @@ def embedding_srp_lsh_pairs_for(
         ]
     )
     banded = e.select(
-        "vec_id", "embedding", norm.alias("norm"), F.explode(bands).alias("bb")
+        "vec_id",
+        "embedding",
+        norm(F.col("embedding")).alias("norm"),
+        F.explode(bands).alias("bb"),
     ).select("vec_id", "embedding", "norm", "bb.band_idx", "bb.band")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -479,7 +443,7 @@ def embedding_srp_lsh_pairs_for(
         "vec_a",
         "vec_b",
         (
-            _pair_dot_seq(F.col("emb_a"), F.col("emb_b"))
+            dot(F.col("emb_a"), F.col("emb_b"))
             / (F.col("norm_a") * F.col("norm_b"))
         ).alias("cosine"),
     )
@@ -495,12 +459,8 @@ def embedding_srp_lsh_sql() -> str:
     bit_exprs = []
     for row in signs:
         arr = _srp_sign_sql(row)
-        dot = (
-            f"list_reduce(list_transform(generate_series(1, len(embedding)), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i]), "
-            f"(x, y) -> x + y)"
-        )
-        bit_exprs.append(f"CASE WHEN ({dot}) > 0 THEN '1' ELSE '0' END")
+        proj = fold_sql("embedding", f"CAST(embedding[i] AS DOUBLE) * ({arr})[i]")
+        bit_exprs.append(f"CASE WHEN ({proj}) > 0 THEN '1' ELSE '0' END")
     bit_cols = ",\n    ".join(
         f"{e} AS bit{i}" for i, e in enumerate(bit_exprs)
     )
@@ -515,7 +475,7 @@ def embedding_srp_lsh_sql() -> str:
     return f"""
 WITH bits AS MATERIALIZED (
   SELECT vec_id, embedding,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS norm,
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS norm,
     {bit_cols}
   FROM embeddings
 ),
@@ -529,9 +489,9 @@ cand AS MATERIALIZED (
                AND a.vec_id < b.vec_id
 )
 SELECT vec_a, vec_b,
-  CAST({_duckdb_dot('emb_a', 'emb_b')} AS DOUBLE) / (norm_a * norm_b) AS cosine
+  CAST({dot_sql('emb_a', 'emb_b')} AS DOUBLE) / (norm_a * norm_b) AS cosine
 FROM cand
-WHERE CAST({_duckdb_dot('emb_a', 'emb_b')} AS DOUBLE) / (norm_a * norm_b)
+WHERE CAST({dot_sql('emb_a', 'emb_b')} AS DOUBLE) / (norm_a * norm_b)
       >= {NEAR_DUP_THRESHOLD}
 """
 
@@ -556,8 +516,6 @@ def ann_ivf_topk_for(
     true 100 TB path: assignment is then strictly linear in N).  The
     corpus side is fan_out-repartitioned for the same reason as the
     Gram pass: the per-row assignment kernel dwarfs its input bytes."""
-    dot = _pair_dot_seq
-    norm = _norm_col
     cents = e.filter(F.col("vec_id") % centroid_mod == 0).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent_emb"),
@@ -632,7 +590,7 @@ def ann_ivf_topk_sql(query_pred: str | None = None) -> str:
 WITH en AS MATERIALIZED (SELECT count(*) AS n FROM embeddings),
 base AS (
   SELECT vec_id, embedding,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS vnorm
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS vnorm
   FROM embeddings
 ),
 cents AS (
@@ -641,7 +599,7 @@ cents AS (
 ),
 assign_scored AS (
   SELECT v.vec_id, v.embedding, v.vnorm, c.cent_id,
-    CAST({_duckdb_dot('v.embedding', 'c.cent_emb')} AS DOUBLE)
+    CAST({dot_sql('v.embedding', 'c.cent_emb')} AS DOUBLE)
       / (v.vnorm * c.cent_norm) AS c_cos
   FROM base v CROSS JOIN cents c
 ),
@@ -660,7 +618,7 @@ probes AS (
 ),
 scored AS (
   SELECT p.query_id, a.vec_id AS cand_id,
-    CAST({_duckdb_dot('p.q_emb', 'a.embedding')} AS DOUBLE)
+    CAST({dot_sql('p.q_emb', 'a.embedding')} AS DOUBLE)
       / (p.q_norm * a.vnorm) AS cosine
   FROM assigned a JOIN probes p ON a.list_id = p.list_id
   WHERE a.vec_id <> p.query_id
@@ -703,16 +661,6 @@ def sq8_codes(e: DataFrame) -> DataFrame:
     return qv.withColumn("qnorm2", sumsq)
 
 
-def sq8_int_dot(a: F.Column, b: F.Column) -> F.Column:
-    """Exact integer dot of two SQ8 code arrays (order-free: integer
-    addition is associative, no float caveats)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8-quantized cosine top-k: each vector scaled per-row to
     [-127, 127] ints (scale = 127/max|x|), scored with INTEGER dot
@@ -732,12 +680,11 @@ def quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = fan_out(qv, e.sparkSession).crossJoin(
         F.broadcast(queries)
     ).filter(F.col("vec_id") != F.col("query_id"))
-    dot = sq8_int_dot(F.col("q_qe"), F.col("qe"))
     scored = pairs.select(
         "query_id",
         F.col("vec_id").alias("cand_id"),
         (
-            dot.cast("double")
+            sq8_int_dot(F.col("q_qe"), F.col("qe")).cast("double")
             / (F.sqrt(F.col("q_norm2").cast("double")) * F.sqrt(F.col("qnorm2").cast("double")))
         ).alias("qcosine"),
     )
@@ -748,7 +695,7 @@ def quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # brute row (QUANTIZED_TOPK_SQL) and clustering's IVF-SQ8 composition.
 # CTE names qv/qn are disjoint from clustering._kmeans_ctes by
 # construction.
-SQ8_SQL_CTES = """qv AS (
+SQ8_SQL_CTES = f"""qv AS (
   SELECT vec_id,
     list_transform(embedding,
       x -> CAST(round(CAST(x AS DOUBLE) * (127.0e0 / CAST(list_max(list_transform(embedding, y -> abs(y))) AS DOUBLE))) AS BIGINT)
@@ -758,18 +705,9 @@ SQ8_SQL_CTES = """qv AS (
 ),
 qn AS (
   SELECT vec_id, qe,
-    (SELECT sum(qe[i] * qe[i]) FROM UNNEST(generate_series(1, len(qe))) AS u(i)) AS qnorm2
+    {sq8_int_dot_sql('qe', 'qe')} AS qnorm2
   FROM qv
 )"""
-
-# DuckDB twin of sq8_int_dot; the caller substitutes the two int-array
-# expressions (e.g. 'q.qe', 'c.qe').
-def sq8_int_dot_sql(a: str, b: str) -> str:
-    return (
-        f"(SELECT sum({a}[i] * {b}[i]) "
-        f"FROM UNNEST(generate_series(1, len({b}))) AS u(i))"
-    )
-
 
 QUANTIZED_TOPK_SQL = f"""
 WITH {SQ8_SQL_CTES},
@@ -779,7 +717,7 @@ queries AS (
 ),
 scored AS (
   SELECT q.query_id, c.vec_id AS cand_id,
-    CAST((SELECT sum(q.q_qe[i] * c.qe[i]) FROM UNNEST(generate_series(1, len(c.qe))) AS u(i)) AS DOUBLE)
+    CAST({sq8_int_dot_sql('q.q_qe', 'c.qe')} AS DOUBLE)
       / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.qnorm2 AS DOUBLE))) AS qcosine
   FROM qn c CROSS JOIN queries q
   WHERE c.vec_id <> q.query_id
@@ -797,7 +735,7 @@ def docs_with_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id == vec_id) with text stats + vector norm side by side."""
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
-    norms = _norms(e)
+    norms = e.select("vec_id", norm(F.col("embedding")).alias("norm"))
     return (
         d.join(e, d.doc_id == e.vec_id)
         .join(norms, "vec_id")
@@ -814,7 +752,7 @@ DOCS_WITH_EMBEDDINGS_SQL = f"""
 SELECT d.doc_id,
   len(string_split(d.text, ' ')) AS n_tokens,
   e.label,
-  sqrt(CAST({_duckdb_dot('e.embedding', 'e.embedding')} AS DOUBLE)) AS embedding_norm
+  sqrt(CAST({dot_sql('e.embedding', 'e.embedding')} AS DOUBLE)) AS embedding_norm
 FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 """
 
@@ -844,33 +782,6 @@ PQ_SUB = EMB_DIM // PQ_M
 # a FORMAT constant (FAISS nbits=8), not a tuning knob; deriving it
 # from the corpus would change the code width.
 PQ_MAX_CODEWORDS = 256
-
-
-def _sq_l2_seq(a: F.Column, b: F.Column) -> F.Column:
-    """Sequential-fold squared L2 distance (same parity contract as
-    `_pair_dot_seq`: per-element doubles, left fold)."""
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sq_l2_unrolled(a: F.Column, b: F.Column, dim: int) -> F.Column:
-    """BIT-IDENTICAL twin of `_sq_l2_seq` for fixed-width sub-vectors:
-    the same left-associated 0.0 + d1 + ... sequence as a flat
-    element_at chain — no per-pair intermediate array.  Used ONLY in
-    the PQ encode argmin (480k exploded sub-vectors x 256 codewords at
-    the 30x replica: 10.25 -> 4.11 s measured); see
-    clustering._sqdist_unrolled for the full fold-vs-unrolled shape
-    rule and the counter-case where unrolling loses 9x."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        diff = F.element_at(a, i).cast("double") - F.element_at(b, i).cast(
-            "double"
-        )
-        expr = expr + diff * diff
-    return expr
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,7 +847,7 @@ def pq_codebook(e: DataFrame, centroid_mod: int = 100) -> DataFrame:
             "cidx",
             F.posexplode("subs").alias("m", "cw"),
         )
-        .withColumn("cw_norm2", _pair_dot_seq(F.col("cw"), F.col("cw")))
+        .withColumn("cw_norm2", dot(F.col("cw"), F.col("cw")))
     )
 
 
@@ -953,11 +864,7 @@ def pq_encode(
     from etl_addresses_spark.functions.sizing import use_unrolled_kernel
 
     n = n_hint if n_hint is not None else e.count()
-    kern = (
-        (lambda a, b: _sq_l2_unrolled(a, b, PQ_SUB))
-        if use_unrolled_kernel(n)
-        else _sq_l2_seq
-    )
+    dim = PQ_SUB if use_unrolled_kernel(n) else None
     # fan_out: encode is M x k sq-l2 folds per row; the scan is
     # bytes-small (r9 batch7)
     subvecs = fan_out(e, e.sparkSession).select(
@@ -969,7 +876,7 @@ def pq_encode(
         .agg(
             F.min(
                 F.struct(
-                    kern(F.col("sv"), F.col("cw")).alias("dist"),
+                    sq_l2(F.col("sv"), F.col("cw"), dim).alias("dist"),
                     F.col("cidx").alias("cidx"),
                     F.col("cw_norm2").alias("cw_norm2"),
                 )
@@ -1013,7 +920,7 @@ def pq_query_luts(
     queries = e.filter(query_pred).select(
         F.col("vec_id").alias("query_id"),
         F.posexplode(_pq_sub_expr()).alias("m", "qsv"),
-        _norm_col(F.col("embedding")).alias("q_norm"),
+        norm(F.col("embedding")).alias("q_norm"),
     )
     lut_m = (
         queries.join(F.broadcast(cents), "m")
@@ -1024,7 +931,7 @@ def pq_query_luts(
                     F.collect_list(
                         F.struct(
                             F.col("cidx"),
-                            _pair_dot_seq(F.col("qsv"), F.col("cw")).alias(
+                            dot(F.col("qsv"), F.col("cw")).alias(
                                 "qdot"
                             ),
                         )
@@ -1079,15 +986,6 @@ def ann_pq_topk_for(e: DataFrame, centroid_mod: int = 100) -> DataFrame:
     return _rank_topk(scored, "pq_cosine")
 
 
-def _duckdb_sq_l2(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), "
-        f"(x, y) -> x + y)"
-    )
-
-
 # The PQ pipeline's oracle CTE block (codebook -> encode -> per-query
 # LUTs), shared verbatim by ANN_PQ_TOPK_SQL (brute ADC over all codes)
 # and clustering.ann_ivf_pq_oracle_sql (ADC over IVF candidates only).
@@ -1107,7 +1005,7 @@ def pq_sql_ctes(
   SELECT vec_id,
     list_transform(generate_series(0, {PQ_M - 1}),
       m -> embedding[m * {PQ_SUB} + 1 : m * {PQ_SUB} + {PQ_SUB}]) AS subs,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS vnorm
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS vnorm
   FROM embeddings
 ),
 cents AS (
@@ -1119,7 +1017,7 @@ cents AS (
 ),
 codebook AS (
   SELECT cidx, m, cents.subs[m] AS cw,
-    {_duckdb_dot('cents.subs[m]', 'cents.subs[m]')} AS cw_norm2
+    {dot_sql('cents.subs[m]', 'cents.subs[m]')} AS cw_norm2
   FROM cents, UNNEST(generate_series(1, {PQ_M})) AS u(m)
 ),
 subvecs AS (
@@ -1130,7 +1028,7 @@ best AS (
   SELECT vec_id, m, cidx, cw_norm2 FROM (
     SELECT s.vec_id, s.m, cb.cidx, cb.cw_norm2,
       row_number() OVER (PARTITION BY s.vec_id, s.m
-        ORDER BY {_duckdb_sq_l2('s.sv', 'cb.cw')} ASC, cb.cidx ASC) AS r
+        ORDER BY {sq_l2_sql('s.sv', 'cb.cw')} ASC, cb.cidx ASC) AS r
     FROM subvecs s JOIN codebook cb ON s.m = cb.m)
   WHERE r = 1
 ),
@@ -1148,7 +1046,7 @@ qsub AS (
 ),
 lut_m AS (
   SELECT q.query_id, q.q_norm, q.m,
-    list({_duckdb_dot('q.qsv', 'cb.cw')} ORDER BY cb.cidx) AS "row"
+    list({dot_sql('q.qsv', 'cb.cw')} ORDER BY cb.cidx) AS "row"
   FROM qsub q JOIN codebook cb ON q.m = cb.m
   GROUP BY q.query_id, q.q_norm, q.m
 ),
@@ -1222,7 +1120,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"),
         F.col("label").alias("cand_label"),
         F.col("embedding").alias("cand_emb"),
-        _norm_col(F.col("embedding")).alias("cand_norm"),
+        norm(F.col("embedding")).alias("cand_norm"),
     )
     anchors = (
         e.filter(F.col("vec_id") % QUERY_MOD == 0)
@@ -1230,7 +1128,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             F.col("label").alias("q_label"),
             F.col("embedding").alias("q_emb"),
-            _norm_col(F.col("embedding")).alias("q_norm"),
+            norm(F.col("embedding")).alias("q_norm"),
         )
     )
     scored = (
@@ -1241,7 +1139,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_id",
             (F.col("cand_label") == F.col("q_label")).alias("is_pos"),
             (
-                _pair_dot_seq(F.col("q_emb"), F.col("cand_emb"))
+                dot(F.col("q_emb"), F.col("cand_emb"))
                 / (F.col("q_norm") * F.col("cand_norm"))
             ).alias("cosine"),
         )
@@ -1270,7 +1168,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTRASTIVE_HARD_NEG_SQL = f"""
 WITH sides AS (
   SELECT vec_id, label,
-    sqrt(CAST({_duckdb_dot('embedding', 'embedding')} AS DOUBLE)) AS norm,
+    sqrt(CAST({dot_sql('embedding', 'embedding')} AS DOUBLE)) AS norm,
     embedding
   FROM embeddings
 ),
@@ -1282,7 +1180,7 @@ anchors AS (
 scored AS (
   SELECT a.query_id, c.vec_id AS cand_id,
     (c.label = a.q_label) AS is_pos,
-    CAST({_duckdb_dot('a.q_emb', 'c.embedding')} AS DOUBLE)
+    CAST({dot_sql('a.q_emb', 'c.embedding')} AS DOUBLE)
       / (a.q_norm * c.norm) AS cosine
   FROM sides c CROSS JOIN anchors a
   WHERE c.vec_id <> a.query_id

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.session import scoped_shuffle_partitions
 from etl_addresses_spark.streaming import event_stream
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -742,7 +743,7 @@ def _cdc_upsert_run(
     # no stateful operator here, but each foreachBatch merge is a batch
     # groupBy whose shuffle should match the (tiny) CDC feed, not the
     # session default
-    with event_stream.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, event_stream.state_partitions_for(src)
     ):
         q = (

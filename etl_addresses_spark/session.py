@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The directory that holds the etl_addresses_spark package: Python
+# workers import operator code (pandas UDFs, lambdas) by module path,
+# so they need it on their path whatever the driver's cwd is.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
@@ -24,29 +30,22 @@ def get_spark(app_name: str = "etl_addresses_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # parallelismFirst=true (the Spark default) refuses to coalesce
-        # below default parallelism, so on local[32] every small shuffle
-        # still pays 32 tasks of fixed overhead — the exact fixed-cost
-        # regime the r10 count-gate width rules kept finding by hand.
-        # Spark's own config doc recommends false for production; the
-        # env knob exists for A/B runs (tools/evidence ledger r11).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # parallelismFirst=true (the Spark default): AQE never coalesces
+        # a shuffle below default parallelism.  false would spare small
+        # shuffles some fixed per-task overhead, but AQE sizes partitions
+        # in bytes and cannot see per-row CPU density: under false it
+        # collapsed CPU-dense stages onto one core (r11:
+        # minhash_lsh_pairs 3.66x, labelprop 1.9x).
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         # Join-strategy envelope (guide §3.1/§9): preferSortMergeJoin
-        # stays at Spark's default unless overridden — the r14 A/B on
-        # the 14 join-bearing headline rows measured the
-        # shuffled-hash-join planner preference within noise on this
-        # fixture set (equi-joins here either broadcast or carry
-        # sorted-side reuse), so the default is kept and the knob
-        # exists for cluster-side tuning evidence.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # stays at Spark's default — the r14 A/B on the 14 join-bearing
+        # headline rows measured the shuffled-hash-join planner
+        # preference within noise on this fixture set (equi-joins here
+        # either broadcast or carry sorted-side reuse).
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # UI off by default (bench noise); SPARK_GRAFT_UI=1 enables it
         # so stress tools can read per-stage shuffle bytes from the

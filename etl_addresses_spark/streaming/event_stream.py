@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_addresses_spark.session import scoped_shuffle_partitions
 from etl_addresses_spark.sources.tables import events_file_schema, normalize_events_ts
 
 
@@ -240,12 +241,6 @@ def events_state_partitions(sf_dir: str) -> int:
     import os
 
     return state_partitions_for(os.path.join(sf_dir, "events.parquet"))
-
-
-# scoped_shuffle_partitions moved to session.py (the BPE trainer sizes
-# its vocab shuffle with the same helper); re-exported here because the
-# streaming call sites read naturally as event_stream.scoped_*.
-from etl_addresses_spark.session import scoped_shuffle_partitions  # noqa: E402,F401
 
 
 def run_to_memory(

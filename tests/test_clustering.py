@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from conftest import SF_ORACLE
 
 from etl_addresses_spark.operators import clustering, similarity
@@ -125,44 +127,34 @@ def test_ivf_list_count_derivation(spark):
             assert thresh == want_t, (n, thresh, want_t)
 
 
-def test_unrolled_kernels_bit_equal_fold(spark):
-    """The unrolled element_at chains used in the broadcast-argmin
-    kernels must be BIT-identical to the sequential folds they replace
-    (same left-association, term for term) — row-wise equality on the
-    fixture, not just aggregate equality."""
+@pytest.mark.parametrize("shape", ["EMB_DIM", "PQ_SUB"])
+def test_unrolled_kernels_bit_equal_fold(spark, shape):
+    """The unrolled element_at chain of vector.sq_l2 used in the
+    broadcast-argmin kernels must be BIT-identical to the sequential
+    fold it replaces (same left-association, term for term) — row-wise
+    equality on the fixture, not just aggregate equality.  EMB_DIM:
+    whole embeddings (k-means assignment); PQ_SUB: PQ sub-vectors
+    (PQ encode)."""
     from pyspark.sql import functions as F
 
+    from etl_addresses_spark.functions.vector import sq_l2
     from etl_addresses_spark.operators.similarity import (
         EMB_DIM,
         PQ_SUB,
         _pq_sub_expr,
-        _sq_l2_seq,
-        _sq_l2_unrolled,
     )
 
     e = load_table(spark, SF_ORACLE, "embeddings")
-    pairs = e.select(
-        "embedding", F.reverse(F.col("embedding")).alias("other")
-    )
-    bad = pairs.filter(
-        ~(
-            clustering._sqdist(F.col("embedding"), F.col("other"))
-            == clustering._sqdist_unrolled(
-                F.col("embedding"), F.col("other"), EMB_DIM
-            )
-        )
-    ).count()
-    assert bad == 0
-    subs = e.select(F.posexplode(_pq_sub_expr()).alias("m", "sv")).select(
-        "sv", F.reverse(F.col("sv")).alias("other")
-    )
-    bad = subs.filter(
-        ~(
-            _sq_l2_seq(F.col("sv"), F.col("other"))
-            == _sq_l2_unrolled(F.col("sv"), F.col("other"), PQ_SUB)
-        )
-    ).count()
-    assert bad == 0
+    if shape == "EMB_DIM":
+        vecs, dim = e.select(F.col("embedding").alias("v")), EMB_DIM
+    else:
+        vecs = e.select(F.posexplode(_pq_sub_expr()).alias("m", "v"))
+        dim = PQ_SUB
+    pairs = vecs.select("v", F.reverse(F.col("v")).alias("other"))
+    fold = sq_l2(F.col("v"), F.col("other"))
+    unrolled = sq_l2(F.col("v"), F.col("other"), dim)
+    assert pairs.filter(~(fold == unrolled)).count() == 0
+    assert pairs.count() > 0
 
 
 def test_index_persist_serve_identity(spark):

@@ -194,3 +194,68 @@ def test_matched_name_null_number_propagates(spark):
     ).collect()
     assert out[0].name == "12 Elm St"
     assert out[1].name is None
+
+
+def test_vector_kernels_match_duckdb_twins_exactly(spark, ddb):
+    """Every Spark vector kernel and its DuckDB twin give the SAME
+    value row for row, with no rounding: the fold contract the
+    similarity rows' oracle hashes rest on, checked directly instead
+    of through their 1e-9-rounded hashes."""
+    from conftest import SF_ORACLE
+
+    from etl_addresses_spark.functions.vector import (
+        dot,
+        dot_sql,
+        sq8_int_dot,
+        sq8_int_dot_sql,
+        sq_l2,
+        sq_l2_sql,
+    )
+    from etl_addresses_spark.operators.similarity import (
+        EMB_DIM,
+        SQ8_SQL_CTES,
+        sq8_codes,
+    )
+    from etl_addresses_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_ORACLE, "embeddings")
+    v, w = F.col("embedding"), F.reverse(F.col("embedding"))
+    spark_rows = e.select(
+        "vec_id",
+        dot(v, w).alias("dot"),
+        dot(v, v).alias("self_dot"),
+        sq_l2(v, w).alias("sq_l2"),
+        sq_l2(v, w, EMB_DIM).alias("sq_l2_unrolled"),
+    ).collect()
+    duck_rows = ddb.sql(
+        f"""SELECT vec_id,
+          {dot_sql('embedding', 'other')} AS dot,
+          {dot_sql('embedding', 'embedding')} AS self_dot,
+          {sq_l2_sql('embedding', 'other')} AS sq_l2
+        FROM (SELECT vec_id, embedding, list_reverse(embedding) AS other
+              FROM embeddings)"""
+    ).fetchall()
+    duck = {r[0]: r[1:] for r in duck_rows}
+    assert len(spark_rows) == len(duck) > 0
+    for r in spark_rows:
+        d_dot, d_self, d_sq = duck[r.vec_id]
+        assert (r.dot, r.self_dot, r.sq_l2, r.sq_l2_unrolled) == (
+            d_dot,
+            d_self,
+            d_sq,
+            d_sq,
+        ), r.vec_id
+
+    spark_int = dict(
+        sq8_codes(e)
+        .select("vec_id", sq8_int_dot(F.col("qe"), F.reverse(F.col("qe"))))
+        .collect()
+    )
+    duck_int = dict(
+        ddb.sql(
+            f"""WITH {SQ8_SQL_CTES}
+            SELECT vec_id, {sq8_int_dot_sql('qe', 'list_reverse(qe)')}
+            FROM qv"""
+        ).fetchall()
+    )
+    assert spark_int == duck_int and len(spark_int) > 0

@@ -107,7 +107,7 @@ def test_semantic_dedup_respects_threshold(spark):
     # cluster member with cosine >= threshold
     import pyspark.sql.functions as F
 
-    from etl_addresses_spark.operators.similarity import _pair_dot_seq
+    from etl_addresses_spark.functions.vector import dot
     from etl_addresses_spark.sources.tables import load_table
 
     out = semantic_dedup(spark, SF_ORACLE)

@@ -13,8 +13,8 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_addresses_spark.plans import streaming_queries as sq  # noqa: E402
-from etl_addresses_spark.plans import event_stream  # noqa: E402
-from etl_addresses_spark.session import get_spark  # noqa: E402
+from etl_addresses_spark.streaming import event_stream  # noqa: E402
+from etl_addresses_spark.session import get_spark, scoped_shuffle_partitions  # noqa: E402
 from etl_addresses_spark.sources.tables import load_table  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -89,7 +89,7 @@ for rep in range(3):
         .parquet(src)
     )
     t0 = time.perf_counter()
-    with event_stream.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, event_stream.state_partitions_for(src)
     ):
         q = (
