@@ -193,11 +193,15 @@ def segment_cells(
     )
 
 
-# --- DuckDB renderings of the same math for oracle SQL -------------------
+# --- SQL-text rendering of the same math -----------------------------------
 
-def duckdb_crosstrack_m(y1: str, x1: str, y2: str, x2: str, py: str, px: str) -> str:
-    """Integer-meter cross-track distance, structurally identical to the
-    Spark expression so both engines compute the same IEEE doubles."""
+def crosstrack_m_sql(y1: str, x1: str, y2: str, x2: str, py: str, px: str) -> str:
+    """Integer-meter cross-track distance as SQL text, structurally
+    identical to `crosstrack_m_rounded` so every engine computes the
+    same IEEE doubles.  The text is valid in both DuckDB (the oracles)
+    and Spark SQL (the grid kernel of operators/spatial_join.py, where
+    one `F.expr` inside a lambda costs far fewer py4j round trips to
+    build than the Column tree)."""
     d13 = (
         f"2 * asin(sqrt(sin((radians({py}) - radians({y1})) / 2)"
         f" * sin((radians({py}) - radians({y1})) / 2)"

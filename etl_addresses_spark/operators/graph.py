@@ -67,6 +67,12 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = DAMPING) 
         .cache()
     )
     n_nodes = nodes.count()
+    if n_nodes == 0:
+        # no edges, no nodes: the empty answer the oracle gives, not a
+        # 1/0 uniform start rank
+        e.unpersist()
+        nodes.unpersist()
+        return edges.sparkSession.createDataFrame([], "node string, rank double")
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     # Loop-invariant prework (r9: the old per-iteration
     # ranks-left-join-out_deg was evaluated TWICE per round — once

@@ -13,22 +13,29 @@ Physical strategy — Spark-first, no R-tree (addresses.js:61-63,151-153
 replaced):
 
 * **grid** (default, the 100 TB path): every segment is assigned each
-  grid cell its ε-expanded bbox touches (ε ≥ the 25 m cutoff), every
-  point its single containing cell, then a plain equi-join on cell id —
-  a shuffle hash join Catalyst/AQE already knows how to optimize, and
-  broadcast automatically when the segment side is small.  Because
-  ε ≥ cutoff, every segment within 25 m of a point lands in that
-  point's cell, so the candidate set is a superset of all surviving
-  matches and the final argmin answer is EXACT (candidates are only
-  ever filtered afterwards; see SURVEY.md §4.3).
-* **broadcast**: broadcast nested-loop cross join (correct at any
-  scale where the segment side fits in memory; used for parity tests).
+  grid cell its ε-expanded bbox touches (ε ≥ the 25 m cutoff), and the
+  segments are grouped into a cell index, `cell -> array<segment>`.
+  Each house number left-joins its single containing cell — Catalyst
+  broadcasts the index while it is small and shuffles both sides by
+  cell past the threshold — and picks its nearest segment inside the
+  row: `array_min` over the admissible segments' score structs.
+  Because ε ≥ cutoff, every segment within 25 m of a point lands in
+  that point's cell, so the cell's list is a superset of all surviving
+  matches and the answer is EXACT (SURVEY.md §4.3).  House numbers are
+  read once and never shuffled, and the trig runs once per bbox +
+  temporal survivor.
+* **broadcast**, **reference_knn**, **reference_knn_grid**: validation
+  strategies that build candidate rows (broadcast cross join, or the
+  strict reference kNN) and reduce them per `houseNumberId` with a
+  `min(score)` aggregate joined back onto the house numbers.
 
-The argmin (addresses.js:83-90) is a `min(struct(...))` aggregation —
-lexicographic struct ordering gives min-by-(distance, streetId,
-seg_index) with a DETERMINISTIC tie-break (the reference's tie-break is
-index-order-dependent, SURVEY.md §5), and a groupBy aggregation gets
-map-side partial aggregation, unlike a window sort.
+All strategies share one admissibility predicate (ε-bbox for the
+default semantics, temporal containment, distance < MAX_DISTANCE_M)
+and one score struct, (distance, streetId, seg_index, streetName):
+its lexicographic order gives min-by-distance with a DETERMINISTIC
+tie-break (the reference's tie-break is index-order-dependent,
+SURVEY.md §5).  Both are SQL text, so the grid kernel is one
+`F.expr` and the validation strategies apply the same text to rows.
 """
 
 from __future__ import annotations
@@ -46,7 +53,7 @@ from etl_addresses_spark.config import (
 from etl_addresses_spark.functions.dates import fuzzy_earliest_ms, fuzzy_latest_ms
 from etl_addresses_spark.functions.geo import (
     BBOX_EPS_DEG,
-    crosstrack_m_rounded,
+    crosstrack_m_sql,
     explode_segments,
     point_cell,
     segment_cells,
@@ -98,11 +105,30 @@ def _prepare_segments(streets: DataFrame) -> DataFrame:
     )
 
 
-def _bbox_refine(cand: DataFrame) -> DataFrame:
+# The segment fields the score and the admissibility predicate read;
+# the grid cell index carries exactly these per segment.
+_SEG_FIELDS = (
+    "streetId",
+    "streetName",
+    "seg_index",
+    "seg_lon1",
+    "seg_lat1",
+    "seg_lon2",
+    "seg_lat2",
+    "seg_since_ms",
+    "seg_until_ms",
+)
+
+# The bbox, temporal and score SQL renderers below take the prefix of
+# the segment fields: "" on candidate rows, "seg." on an element of a
+# cell's segment array.
+
+
+def _bbox_sql(s: str = "") -> str:
     """Exact candidate predicate: the point lies inside the segment's
     ε-expanded bbox (the reference R-tree's `search` probe,
-    addresses.js:61).  Applied after the (coarser) grid-cell prefilter
-    so both physical strategies implement identical logical semantics.
+    addresses.js:61).  It refines the (coarser) grid cell, so the grid
+    and broadcast strategies implement identical logical semantics.
 
     Deliberate deviation from the reference (documented, SURVEY.md §4.3
     edge note): the reference ALSO feeds the 10 index-nearest segments
@@ -113,35 +139,105 @@ def _bbox_refine(cand: DataFrame) -> DataFrame:
     exclude those degenerate matches: a candidate must be spatially near
     the point (within ε ≈ 45-55 m), not merely near its great circle.
     """
-    eps = F.lit(BBOX_EPS_DEG)
-    return cand.filter(
-        (F.col("pt_lon") >= F.least(F.col("seg_lon1"), F.col("seg_lon2")) - eps)
-        & (F.col("pt_lon") <= F.greatest(F.col("seg_lon1"), F.col("seg_lon2")) + eps)
-        & (F.col("pt_lat") >= F.least(F.col("seg_lat1"), F.col("seg_lat2")) - eps)
-        & (F.col("pt_lat") <= F.greatest(F.col("seg_lat1"), F.col("seg_lat2")) + eps)
+    eps = f"{BBOX_EPS_DEG!r}D"
+    return (
+        f"pt_lon >= least({s}seg_lon1, {s}seg_lon2) - {eps}"
+        f" AND pt_lon <= greatest({s}seg_lon1, {s}seg_lon2) + {eps}"
+        f" AND pt_lat >= least({s}seg_lat1, {s}seg_lat2) - {eps}"
+        f" AND pt_lat <= greatest({s}seg_lat1, {s}seg_lat2) + {eps}"
     )
 
 
+def _temporal_sql(s: str = "") -> str:
+    """The segment's ±15-year widened validity contains the house
+    number's (addresses.js:66-74): long compares, so it runs before the
+    trig."""
+    return f"{s}seg_since_ms <= addr_since_ms AND {s}seg_until_ms >= addr_until_ms"
+
+
+def _score_sql(s: str = "") -> str:
+    """The argmin key (addresses.js:75-90): rounded cross-track meters,
+    then (streetId, seg_index) as the deterministic tie-break; the
+    street name rides along as payload."""
+    dist = crosstrack_m_sql(
+        f"{s}seg_lat1",
+        f"{s}seg_lon1",
+        f"{s}seg_lat2",
+        f"{s}seg_lon2",
+        "pt_lat",
+        "pt_lon",
+    )
+    return (
+        f"struct({dist} AS distance, {s}streetId AS streetId, "
+        f"{s}seg_index AS seg_index, {s}streetName AS streetName)"
+    )
+
+
+def _near_sql(score: str) -> str:
+    """The distance cutoff (addresses.js:82) on a score struct."""
+    return f"{score}.distance < {MAX_DISTANCE_M}"
+
+
+def _segment_cells(segs: DataFrame) -> DataFrame:
+    """One row per (segment, grid cell its ε-expanded bbox touches)."""
+    return segs.withColumn(
+        "cell",
+        F.explode(
+            segment_cells(
+                F.col("seg_lat1"),
+                F.col("seg_lon1"),
+                F.col("seg_lat2"),
+                F.col("seg_lon2"),
+            )
+        ),
+    )
+
+
+def _nearest_in_cell(hn: DataFrame, segs: DataFrame) -> DataFrame:
+    """The grid strategy: `hn` plus `best`, the nearest admissible
+    segment's score struct (NULL when none), computed per row.
+
+    The segments are grouped into a cell index and each house number
+    left-joins its one cell; the argmin then runs inside the row over
+    the cell's segment array — bbox and temporal filter first, the
+    trig only on their survivors, then the distance cutoff.  No
+    candidate row is ever materialized, so the house numbers are
+    scanned once and never shuffled."""
+    index = (
+        _segment_cells(segs)
+        .groupBy("cell")
+        .agg(F.collect_list(F.struct(*_SEG_FIELDS)).alias("segs"))
+    )
+    nearest = F.expr(
+        "array_min(filter(transform("
+        f"filter(segs, seg -> {_bbox_sql('seg.')} AND {_temporal_sql('seg.')}), "
+        f"seg -> {_score_sql('seg.')}), "
+        f"c -> {_near_sql('c')}))"
+    )
+    return (
+        hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
+        .join(index, "cell", "left")
+        .select(*hn.columns, nearest.alias("best"))
+    )
+
+
+def _nearest_per_id(hn: DataFrame, cand: DataFrame) -> DataFrame:
+    """The validation strategies' reduction: `hn` plus `best`, the
+    minimum admissible score over each houseNumberId's candidate rows,
+    joined back onto the house numbers."""
+    best = (
+        cand.filter(F.expr(_temporal_sql()))
+        .select("houseNumberId", F.expr(_score_sql()).alias("score"))
+        .filter(F.expr(_near_sql("score")))
+        .groupBy("houseNumberId")
+        .agg(F.min("score").alias("best"))
+    )
+    return hn.join(best, "houseNumberId", "left")
+
+
 def _candidates(hn: DataFrame, segs: DataFrame, strategy: str) -> DataFrame:
-    if strategy == "grid":
-        seg_cells = segs.withColumn(
-            "cell",
-            F.explode(
-                segment_cells(
-                    F.col("seg_lat1"),
-                    F.col("seg_lon1"),
-                    F.col("seg_lat2"),
-                    F.col("seg_lon2"),
-                )
-            ),
-        )
-        hn_cells = hn.withColumn("cell", point_cell(F.col("pt_lat"), F.col("pt_lon")))
-        # Equi-join on cell id: Catalyst picks broadcast-hash when the
-        # segment side is small, shuffle-hash/sort-merge otherwise; AQE
-        # splits skewed cells (dense urban areas) at runtime.
-        return _bbox_refine(hn_cells.join(seg_cells, "cell").drop("cell"))
     if strategy == "broadcast":
-        return _bbox_refine(hn.crossJoin(F.broadcast(segs)))
+        return hn.crossJoin(F.broadcast(segs)).filter(F.expr(_bbox_sql()))
     if strategy == "reference_knn":
         return _reference_knn_candidates(hn, segs)
     if strategy == "reference_knn_grid":
@@ -213,24 +309,13 @@ def _grid_knn_local(hn: DataFrame, segs: DataFrame) -> DataFrame:
     capped by its 25-cell neighborhood's segment count."""
     from etl_addresses_spark.functions.geo import point_neighbor_cells
 
-    seg_cells = segs.withColumn(
-        "cell",
-        F.explode(
-            segment_cells(
-                F.col("seg_lat1"),
-                F.col("seg_lon1"),
-                F.col("seg_lat2"),
-                F.col("seg_lon2"),
-            )
-        ),
-    )
     probes = hn.withColumn(
         "cell", F.explode(point_neighbor_cells(F.col("pt_lat"), F.col("pt_lon")))
     )
     # A segment indexed in several block cells would appear per cell:
     # dedup to one candidate row per (point, segment) before ranking.
     return (
-        probes.join(seg_cells, "cell")
+        probes.join(_segment_cells(segs), "cell")
         .drop("cell")
         .repartition("houseNumberId")
         .dropDuplicates(["houseNumberId", "streetId", "seg_index"])
@@ -292,63 +377,26 @@ def infer_addresses(
 ) -> DataFrame:
     """Full infer step: returns the `inferred` DataFrame — one row per
     surviving house number, matched columns or `error` populated
-    (schema parity with FIXTURES.md §A3, addresses.js:95-114)."""
+    (schema parity with FIXTURES.md §A3, addresses.js:95-114).
+
+    The grid strategy matches per record, like the reference's loop
+    over house numbers: two exact-duplicate rows each get the same
+    street, and two rows that share a houseNumberId but sit at
+    different points each get their own nearest street.  The
+    validation strategies reduce per houseNumberId instead, so such
+    rows share the minimum over their union; on unique ids (every
+    fixture) all strategies agree."""
     hn = _prepare_house_numbers(house_numbers)
     segs = _prepare_segments(streets)
-
-    cand = _candidates(hn, segs, strategy)
-
-    # Cheap-before-expensive predicate cascade (addresses.js:66-82):
-    # temporal containment (long compares) before spherical trig.
-    cand = cand.filter(
-        (F.col("seg_since_ms") <= F.col("addr_since_ms"))
-        & (F.col("seg_until_ms") >= F.col("addr_until_ms"))
-    )
-    # Pushdown barrier: without it Catalyst folds the distance filter
-    # into the join condition ahead of the cheap bbox conjuncts, and the
-    # trig evaluates for every cell-co-resident pair instead of only
-    # bbox+temporal survivors (Catalyst doesn't cost-order conjuncts).
-    # A nondeterministic column blocks predicate pushdown through the
-    # projection; it is dropped immediately after.
-    cand = cand.withColumn("_pushdown_barrier", F.monotonically_increasing_id())
-    cand = cand.withColumn(
-        "distance",
-        crosstrack_m_rounded(
-            F.col("seg_lat1"),
-            F.col("seg_lon1"),
-            F.col("seg_lat2"),
-            F.col("seg_lon2"),
-            F.col("pt_lat"),
-            F.col("pt_lon"),
-        ),
-    ).filter(F.col("distance") < MAX_DISTANCE_M).drop("_pushdown_barrier")
-
-    # Argmin with deterministic tie-break: lexicographic min of
-    # (distance, streetId, seg_index, payload...) — map-side combinable.
-    best = (
-        cand.groupBy("houseNumberId")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("distance"),
-                    F.col("streetId"),
-                    F.col("seg_index"),
-                    F.col("streetName"),
-                )
-            ).alias("best")
-        )
-        .select(
-            F.col("houseNumberId"),
-            F.col("best.distance").alias("lineLength"),
-            F.col("best.streetId").alias("streetId"),
-            F.col("best.streetName").alias("streetName"),
-        )
-    )
+    if strategy == "grid":
+        joined = _nearest_in_cell(hn, segs)
+    else:
+        joined = _nearest_per_id(hn, _candidates(hn, segs, strategy))
 
     # Left-outer: unmatched house numbers become error records
     # (addresses.js:88,107-114).
-    joined = hn.join(best, "houseNumberId", "left")
-    matched = F.col("streetId").isNotNull()
+    street_id, street_name = F.col("best.streetId"), F.col("best.streetName")
+    matched = street_id.isNotNull()
     return joined.select(
         F.when(matched, F.col("hn_internal_id")).alias("id"),
         # concat (not concat_ws): propagates NULL like the oracle's
@@ -357,17 +405,15 @@ def infer_addresses(
         # "undefined <street>" rendering of a JS undefined.
         F.when(
             matched,
-            F.concat(
-                F.col("addressData.number"), F.lit(" "), F.col("streetName")
-            ),
+            F.concat(F.col("addressData.number"), F.lit(" "), street_name),
         ).alias("name"),
         F.col("houseNumberId"),
-        F.col("streetId"),
+        street_id.alias("streetId"),
         F.when(matched, F.col("hn_validSince")).alias("validSince"),
         F.when(matched, F.col("hn_validUntil")).alias("validUntil"),
-        F.col("streetName"),
+        street_name.alias("streetName"),
         F.col("addressData"),
-        F.col("lineLength"),
+        F.col("best.distance").alias("lineLength"),
         F.col("addressGeometry"),
         F.when(~matched, F.lit(ERROR_MESSAGE)).alias("error"),
     )

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_addresses_spark.config import KNN_FANOUT, MAX_DISTANCE_M, MS_THRESHOLD
 from etl_addresses_spark.functions.dates import DUCKDB_EARLIEST_MS, DUCKDB_LATEST_MS
-from etl_addresses_spark.functions.geo import duckdb_crosstrack_m
+from etl_addresses_spark.functions.geo import crosstrack_m_sql
 from etl_addresses_spark.operators.spatial_join import infer_addresses, inferred_flat
 from etl_addresses_spark.sources.fixtures import (
     DUCKDB_FIXTURE_CTES,
@@ -35,7 +35,7 @@ _SEG_SINCE = DUCKDB_EARLIEST_MS.format(c="validSince")
 _SEG_UNTIL = DUCKDB_LATEST_MS.format(c="validUntil")
 _HN_SINCE = DUCKDB_EARLIEST_MS.format(c="validSince")
 _HN_UNTIL = DUCKDB_LATEST_MS.format(c="validUntil")
-_DIST = duckdb_crosstrack_m("s.y1", "s.x1", "s.y2", "s.x2", "h.pt_lat", "h.pt_lon")
+_DIST = crosstrack_m_sql("s.y1", "s.x1", "s.y2", "s.x2", "h.pt_lat", "h.pt_lon")
 
 # CTE prefix shared by both candidate strategies: fixtures + prepared
 # segment/house-number sides.
@@ -88,7 +88,7 @@ _DX = (
 _DY = (
     "greatest(least(y1, y2) - pt_lat, pt_lat - greatest(y1, y2), 0.0e0)"
 )
-_DIST_P = duckdb_crosstrack_m("y1", "x1", "y2", "x2", "pt_lat", "pt_lon")
+_DIST_P = crosstrack_m_sql("y1", "x1", "y2", "x2", "pt_lat", "pt_lon")
 _CAND_KNN = f""",
 pairs AS (
   SELECT h.houseNumberId, s.streetId, s.streetName, s.seg_index,

@@ -149,6 +149,43 @@ def test_matched_record_shape(golden):
     assert r["error"] is None
 
 
+def _infer_rows(spark, streets, hns):
+    sdf = spark.createDataFrame(streets, STREET_SCHEMA)
+    hdf = spark.createDataFrame(hns, HN_SCHEMA)
+    return infer_addresses(hdf, sdf, strategy="grid").collect()
+
+
+def test_exact_duplicate_rows_each_match(spark):
+    # two identical house-number rows are two records: both match the
+    # same street, as the oracle's left join of `best` onto `hn` does
+    streets = [_street("a", "A St", "1850", "1860", [[0.8, 0.0], [0.81, 0.0]])]
+    dup = _hn("hn_dup", "1855", "1855", 0.805, 10 * DEG_PER_M)
+    rows = _infer_rows(spark, streets, [dup, dup])
+    assert len(rows) == 2
+    for r in rows:
+        assert r["houseNumberId"] == "building-inspector/hn_dup"
+        assert r["streetId"] == "nyc-streets/a"
+        assert r["lineLength"] == 10
+
+
+def test_shared_id_rows_match_per_point(spark):
+    # the reference loops per record ("per point", SURVEY.md J2): two
+    # rows sharing one id at different points each get their OWN
+    # nearest street, not the minimum over their union
+    streets = [
+        _street("a", "A St", "1850", "1860", [[0.8, 0.0], [0.81, 0.0]]),
+        _street("b", "B St", "1850", "1860", [[1.0, 0.0], [1.01, 0.0]]),
+    ]
+    hns = [
+        _hn("hn_shared", "1855", "1855", 0.805, 10 * DEG_PER_M),
+        _hn("hn_shared", "1855", "1855", 1.005, 5 * DEG_PER_M),
+    ]
+    got = sorted(
+        (r["streetId"], r["lineLength"]) for r in _infer_rows(spark, streets, hns)
+    )
+    assert got == [("nyc-streets/a", 10), ("nyc-streets/b", 5)]
+
+
 def test_reference_knn_dominates_grid(spark):
     """reference_knn candidates are a strict superset of the default
     bbox candidates, so every grid match must also match under

@@ -33,6 +33,21 @@ def test_pagerank_matches_dense_power_iteration(spark):
         assert abs(got[n] - want[n]) < 1e-12, (n, got[n], want[n])
 
 
+def test_pagerank_empty_edges_is_empty(spark):
+    # no edges -> no nodes -> no ranks (pagerank_oracle_sql's answer);
+    # the frames cached for the loop must not outlive the call
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    edges = spark.createDataFrame([], "from_id string, to_id string")
+    out = graph.pagerank(edges)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("node", "string"),
+        ("rank", "double"),
+    ]
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+
 def test_pagerank_mass_conserved_and_deterministic(spark):
     from etl_addresses_spark.operators.graph import pagerank_relations
 

@@ -26,13 +26,13 @@ def test_flagship_grid_uses_broadcast_hash_join(spark):
 
 
 def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
-    """The cell candidate join's 100 TB story is declarative: Catalyst
-    broadcasts while the exploded segment side fits the threshold and
-    shuffles past it (the flip measured firing naturally at 800k
-    streets in tools/evidence/r7_spatial_flip.json).  Pin the shuffle
-    TIER here: with the threshold forced to 0, the same logical plan
-    must come out as a shuffle join (never a nested-loop product) and
-    return exactly the broadcast tier's rows."""
+    """The cell join's 100 TB story is declarative: Catalyst broadcasts
+    the cell index while it fits the threshold and shuffles past it
+    (the flip measured firing naturally at 800k streets in
+    tools/evidence/r7_spatial_flip.json).  Pin the shuffle TIER here:
+    with the threshold forced to -1, the same logical plan must come
+    out as a shuffle join on the cell key (never a nested-loop product)
+    and return exactly the broadcast tier's rows."""
     conf = spark.conf
     prev = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -44,16 +44,14 @@ def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
         spark.catalog.clearCache()
         df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
         plan = _plan(df)
-        # the CELL candidate join is the one whose condition carries
-        # the trig refine (ASIN); it must be a shuffle join here —
-        # other flagship branches may legitimately stay nested-loop
+        # the house-number-to-cell-index join is the one keyed on
+        # `cell`; other flagship branches may legitimately stay
+        # nested-loop
         cell_join = next(
-            l for l in plan.splitlines()
-            if "ASIN" in l
-            and ("SortMergeJoin" in l or "ShuffledHashJoin" in l
-                 or "BroadcastHashJoin" in l or "Join" in l)
+            l for l in plan.splitlines() if "Join [cell#" in l
         )
         assert "SortMergeJoin" in cell_join or "ShuffledHashJoin" in cell_join
+        assert "LeftOuter" in cell_join
         assert "CartesianProduct" not in plan
         shuffled = sorted(map(tuple, df.collect()), key=repr)
     finally:
@@ -71,18 +69,39 @@ def test_flagship_grid_flips_to_shuffle_join_past_broadcast_tier(spark):
 
 
 def test_flagship_distance_not_before_bbox(spark):
-    # cheap-to-expensive conjunct order: the trig (ASIN) must appear
-    # after the bbox comparisons inside the join condition string
+    # cheap-to-expensive order inside the per-row kernel: the trig
+    # (ASIN) is mapped only over the cell's segment array AFTER the
+    # bbox and temporal comparisons have filtered it
     df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
     plan = _plan(df)
-    # several joins may broadcast; the candidate join is the one whose
-    # condition carries the trig
-    join_line = next(
-        l
-        for l in plan.splitlines()
-        if "BroadcastHashJoin" in l and "ASIN" in l
-    )
-    assert join_line.index("least") < join_line.index("ASIN")
+    trig_lines = [l for l in plan.splitlines() if "ASIN" in l]
+    assert len(trig_lines) == 1
+    line = trig_lines[0]
+    gate = line.index("transform(filter(")
+    asin = line.index("ASIN")
+    assert gate < asin
+    # the filter feeding the trig's transform carries the bbox and the
+    # temporal conjuncts
+    admissible = line[gate:asin]
+    assert "least(" in admissible and "greatest(" in admissible
+    assert "seg_since_ms" in admissible and "seg_until_ms" in admissible
+
+
+def test_flagship_grid_reads_house_numbers_once_without_regrouping(spark):
+    """The grid argmin runs inside each house-number row: no shuffle
+    or sort-aggregate keyed on houseNumberId, the trig appears once
+    (two ASIN calls per cross-track evaluation), and the house-number
+    fixture is scanned once — no join back onto a second scan."""
+    df = flagship.spatiotemporal_join(spark, SF_SMALL, strategy="grid")
+    plan = _plan(df)
+    assert "hashpartitioning(houseNumberId" not in plan
+    assert "SortAggregate" not in plan
+    assert plan.count("ASIN(") == 2
+    customer_scans = [
+        l for l in plan.splitlines()
+        if "FileScan" in l and "customer.parquet" in l
+    ]
+    assert len(customer_scans) == 1
 
 
 def test_pricing_summary_pushes_filter_and_prunes_columns(spark):

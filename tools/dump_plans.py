@@ -14,11 +14,14 @@ def main():
     sections = [
         ("Flagship spatio-temporal join (grid strategy)",
          plan(flagship.spatiotemporal_join(spark, SF, strategy="grid")), """
-What to look for: BroadcastHashJoin on the grid `cell` key (segments
-broadcast); join condition ordered bbox -> temporal -> rounded
-cross-track trig (And codegen short-circuits left-to-right); argmin as
-partial_min/min of a struct (map-side combine); the final left-outer
-join attaching matches back to all house numbers."""),
+What to look for: the segment side's only Exchange is the cell index
+(ObjectHashAggregate collect_list by `cell`), broadcast into a
+LeftOuter BroadcastHashJoin of the house numbers on `cell`; the argmin
+is one projection, array_min(filter(transform(filter(segs, bbox AND
+temporal), score), distance < 25)), so the trig (two ASIN) appears
+once and only over bbox+temporal survivors; the customer fixture is
+scanned once, with no Exchange, Sort or aggregate keyed on
+houseNumberId."""),
         ("TPC-H Q1 shape (agg_pricing_summary)",
          plan(relational.agg_pricing_summary(spark, SF)), """
 What to look for: PushedFilters on l_shipdate reaching the parquet
